@@ -65,10 +65,6 @@ def main() -> None:
             "-Xms12g -XX:+AlwaysPreTouch -XX:+UseParallelGC -Xmn8g",
         )
         .config("spark.ui.enabled", "false")
-        # FAIR so the concurrent-serving section's per-thread pools
-        # round-robin instead of convoying FIFO; neutral for the
-        # single-threaded suite lines
-        .config("spark.scheduler.mode", "FAIR")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -296,14 +292,12 @@ def main() -> None:
     lat.sort()
     timings["bm25_topk_p95"] = round(lat[int(len(lat) * 0.95) - 1], 3)
 
-    # concurrent serving throughput: the serving shape the
-    # reference's Spring endpoint has.  The build corpus is written
-    # as a PERSISTED bucket-partitioned block-max index (each query
-    # reads only its terms' bucket dirs — parquet partition pruning),
-    # then N driver threads issue a mixed workload concurrently, one
-    # FAIR scheduler pool per thread so no query convoys behind
-    # another's stages.  Reported as qps + p95-under-concurrency;
-    # NOT added to the suite total (it is a rate, not a line).
+    # serving: the build corpus is written as a PERSISTED
+    # bucket-partitioned block-max index (each query reads only its
+    # terms' bucket dirs — parquet partition pruning), then one mixed
+    # workload is timed single-stream on the Spark path, batched,
+    # driver-local and over HTTP.  Reported as latencies and qps;
+    # NOT added to the suite total (they are rates, not lines).
     import shutil
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
@@ -326,10 +320,7 @@ def main() -> None:
         "willow zephyr", "amber breeze canyon",
     ]
 
-    def one_query(q, pool_name="default"):
-        spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", pool_name
-        )
+    def one_query(q):
         t0 = time.time()
         search_compact(cidx, q, limit=10).collect()
         return time.time() - t0
@@ -337,26 +328,16 @@ def main() -> None:
     for q in workload:  # plan/codegen/footer warmup off the clock
         one_query(q)
     lat_1 = sorted(one_query(q) for q in workload)  # single-stream
-    qps_threads = min(8, cpus)
-    reps = 5
-    work = [(q, f"serve{i % qps_threads}")
-            for i, q in enumerate(workload * reps)]
-    t0 = time.time()
-    with ThreadPoolExecutor(max_workers=qps_threads) as pool:
-        lat_c = sorted(
-            pool.map(lambda a: one_query(*a), work)
-        )
-    qps_wall = time.time() - t0
+    work = workload * 5
     # batched serving — the 100 TB shape: the same workload as ONE
     # search_many_compact job (per-query fixed orchestration cost is
     # paid once for the whole batch, not once per query)
     from search_engine_spark.plans.wand import search_many_compact
 
-    batch_queries = [q for q, _ in work]
     search_many_compact(cidx, workload, limit=10).collect()  # warmup
     t0 = time.time()
     nrow = len(
-        search_many_compact(cidx, batch_queries, limit=10).collect()
+        search_many_compact(cidx, work, limit=10).collect()
     )
     batch_wall = time.time() - t0
     # driver-local serving fast path (plans/local_serve.py): the same
@@ -385,7 +366,7 @@ def main() -> None:
     lat_cold.sort()
     t0 = time.time()
     n_local = 0
-    for q, _ in work:
+    for q in work:
         n_local += len(lidx.search(q, limit=10))
     local_wall = time.time() - t0
 
@@ -448,7 +429,7 @@ def main() -> None:
             except Exception:
                 proc.kill()
 
-    http_reqs = [q for q, _ in work] * 3  # 120 requests
+    http_reqs = work * 3  # 120 requests
     http_workers = min(6, cpus)
     # independent try per run: a hiccup in one must neither sink the
     # suite nor discard the other run's measurement
@@ -479,13 +460,7 @@ def main() -> None:
             1000 * lat_cold[len(lat_cold) // 2], 2
         ),
         "bm25_local_qps": round(len(work) / local_wall, 1),
-        "bm25_qps_concurrent": round(len(lat_c) / qps_wall, 2),
-        "bm25_qps_p95_sec": round(
-            lat_c[int(len(lat_c) * 0.95) - 1], 3
-        ),
-        "bm25_qps_threads": qps_threads,
-        "bm25_qps_queries": len(lat_c),
-        "bm25_qps_batched": round(len(batch_queries) / batch_wall, 2),
+        "bm25_qps_batched": round(len(work) / batch_wall, 2),
         "bm25_batched_rows": nrow,
     }
     shutil.rmtree(serve_dir, ignore_errors=True)

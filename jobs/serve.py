@@ -28,8 +28,9 @@ Freshness: the committed generation is re-checked per request via
 the descriptor's ``gen`` (stats.json is tiny); a maintenance commit
 swaps in a fresh LocalIndex — the same object-lifetime invalidation
 the memos rely on.  stdlib ThreadingHTTPServer; each LocalIndex is
-effectively read-only after warm-up, and the GIL-guarded memo dicts
-are safe for concurrent readers.
+effectively read-only after warm-up, and its memos are bounded LRUs
+that each take a lock (search_engine_spark/lru.py), so concurrent
+request threads share them safely.
 """
 
 from __future__ import annotations
@@ -98,6 +99,14 @@ class _Server(ThreadingHTTPServer):
                     raise
                 time.sleep(0.01 * (attempt + 1))
         if probe is None:
+            print(
+                json.dumps({
+                    "warning": "freshness probe failed 5 times; "
+                               "serving the warm generation",
+                    "gen": cur.gen,
+                }),
+                file=sys.stderr, flush=True,
+            )
             return cur
         if cur is None or probe.gen != cur.gen:
             self.lidx = probe

@@ -42,22 +42,19 @@ postings make hot-vocabulary queries metadata-free.
 from __future__ import annotations
 
 import json
-import math
 import os
-import threading
-from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
 
 from search_engine_spark.functions.codec import bm25_u, read_block
 from search_engine_spark.operators.compact import bucket_of
-from search_engine_spark.plans.search import analyze_query
+from search_engine_spark.lru import BoundedLRU
+from search_engine_spark.plans.search import analyze_query, robertson_idf
 
 # per-index memo caps (serving processes are long-lived; a crawl-wide
-# vocabulary must not accumulate without bound).  Eviction is LRU and
-# the CURRENT call's keys are refreshed to the back and exempted, so a
-# key can never be evicted by the very call that is about to use it.
+# vocabulary must not accumulate without bound).  Eviction rule:
+# search_engine_spark/lru.BoundedLRU.
 _DF_MEMO_CAP = 262_144
 _POSTINGS_MEMO_CAP_ROWS = 4_000_000
 _SITE_N_MEMO_CAP = 1_024
@@ -151,26 +148,19 @@ class LocalIndex:
             if gen is not None
             else None
         )
-        self._df_memo: OrderedDict[str, int] = OrderedDict()
-        self._post_memo: OrderedDict[str, tuple] = OrderedDict()
-        self._post_memo_rows = 0
+        # one bounded LRU per memo (thread-safe: jobs/serve.py runs
+        # concurrent request threads over a shared LocalIndex); caps
+        # are read here, when the memo is created
+        self._df_memo = BoundedLRU(_DF_MEMO_CAP)
+        self._post_memo = BoundedLRU(
+            _POSTINGS_MEMO_CAP_ROWS, weight=lambda e: int(e[0].size)
+        )
+        self._site_n_memo = BoundedLRU(_SITE_N_MEMO_CAP)
+        self._doc_memo = BoundedLRU(_DOC_MEMO_CAP)
         self._datasets = None
         self._docs_ds = None
         self._ts_ds = None
         self._tombstones = None
-        self._site_n_memo: OrderedDict[frozenset, int] = OrderedDict()
-        self._doc_memo: OrderedDict[int, tuple | None] = OrderedDict()
-        # one lock guards ALL memo bookkeeping (jobs/serve.py runs
-        # concurrent request threads over a shared LocalIndex).  The
-        # protocol keeps parquet reads outside the lock: snapshot the
-        # hits (taking references) under the lock, fill misses
-        # unlocked, insert under the lock, and build the return value
-        # only from values already in hand — so a concurrent
-        # eviction can never invalidate what a call returns.  Two
-        # threads missing the same key may both fill it (identical
-        # values; the insert is idempotent and row accounting is
-        # guarded by the presence check).
-        self._memo_lock = threading.Lock()
 
     # -- table access -------------------------------------------------
 
@@ -259,18 +249,9 @@ class LocalIndex:
 
     def term_df(self, terms: list[str]) -> dict[str, int]:
         """Global document frequency per term (0 = not in the
-        dictionary), LRU-memoized per index object (thread-safe:
-        see ``_memo_lock``)."""
-        with self._memo_lock:
-            out = {
-                t: self._df_memo[t]
-                for t in terms
-                if t in self._df_memo
-            }
-            for t in out:
-                self._df_memo.move_to_end(t)
-        missing = sorted(set(terms) - out.keys())
-        if missing:
+        dictionary), LRU-memoized per index object."""
+
+        def fill(missing):
             import pyarrow.compute as pc
 
             tbl = self._term_stats_dataset().to_table(
@@ -283,69 +264,38 @@ class LocalIndex:
                     (int(x) for x in tbl.column("df").to_pylist()),
                 )
             )
-            filled = {t: found.get(t, 0) for t in missing}
-            with self._memo_lock:
-                for t, v in filled.items():
-                    self._df_memo[t] = v
-                # refresh every current term still present, then
-                # evict only beyond them — eviction can never take a
-                # term this call is returning (the return dict holds
-                # the values directly)
-                floor = 0
-                for t in dict.fromkeys(terms):
-                    if t in self._df_memo:
-                        self._df_memo.move_to_end(t)
-                        floor += 1
-                while (
-                    len(self._df_memo) > _DF_MEMO_CAP
-                    and len(self._df_memo) > floor
-                ):
-                    self._df_memo.popitem(last=False)
-            out.update(filled)
-        return {t: out[t] for t in terms}
+            return {t: found.get(t, 0) for t in missing}
+
+        return self._df_memo.fetch(terms, fill)
 
     def _site_n(self, sites: list[str]) -> int:
         """N restricted to ``sites`` (sum of site_stats pages) — the
-        reference's local-N quirk (SearchServiceImpl.java:244-255)."""
+        reference's local-N quirk (SearchServiceImpl.java:244-255).
+        The key comes straight from the HTTP query string — a small
+        LRU cap keeps a hostile/diverse client from growing the
+        long-lived server's memory without bound."""
         key = frozenset(sites)
-        with self._memo_lock:
-            if key in self._site_n_memo:
-                self._site_n_memo.move_to_end(key)
-                return self._site_n_memo[key]
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
 
-        tbl = ds.dataset(
-            self._table_dir("site_stats"), filesystem=self._fs
-        ).to_table(filter=pc.field("site").isin(sites))
-        n = int(sum(tbl.column("pages").to_pylist()))
-        # the key comes straight from the HTTP query string — a small
-        # LRU cap keeps a hostile/diverse client from growing the
-        # long-lived server's memory without bound
-        with self._memo_lock:
-            self._site_n_memo[key] = n
-            while len(self._site_n_memo) > _SITE_N_MEMO_CAP:
-                self._site_n_memo.popitem(last=False)
-        return n
+        def fill(_missing):
+            import pyarrow.compute as pc
+            import pyarrow.dataset as ds
+
+            tbl = ds.dataset(
+                self._table_dir("site_stats"), filesystem=self._fs
+            ).to_table(filter=pc.field("site").isin(sites))
+            return {key: int(sum(tbl.column("pages").to_pylist()))}
+
+        return self._site_n_memo.fetch([key], fill)[key]
 
     def query_idf(
         self, terms: list[str], sites: list[str] | None = None
     ) -> dict[str, float]:
-        """Robertson IDF with the global-df / local-N quirk — same
-        dropped-term rules as plans.search.query_term_idf."""
+        """Robertson IDF with the global-df / local-N quirk
+        (plans.search.robertson_idf, shared with the Spark path)."""
         if not terms:
             return {}
         n = self._site_n(sites) if sites else self.n_docs
-        dfs = self.term_df(terms)
-        out = {}
-        for t in terms:
-            df = dfs[t]
-            if df <= 0:
-                continue
-            ratio = (n - df + 0.5) / (df + 0.5)
-            if ratio > 0:
-                out[t] = math.log(ratio)
-        return out
+        return robertson_idf(n, self.term_df(terms))
 
     # -- postings -----------------------------------------------------
 
@@ -356,16 +306,8 @@ class LocalIndex:
         doc_lens)}`` (uint64 arrays, sorted by doc_id within each
         segment run).  Bucket-pruned + row-group-pruned parquet read,
         numpy block decode, LRU-memoized by total decoded rows."""
-        with self._memo_lock:
-            out = {
-                t: self._post_memo[t]
-                for t in terms
-                if t in self._post_memo
-            }
-            for t in out:
-                self._post_memo.move_to_end(t)
-        need = sorted(set(terms) - out.keys())
-        if need:
+
+        def fill(need):
             import pyarrow.compute as pc
 
             buckets = sorted({bucket_of(t, self.n_buckets) for t in need})
@@ -394,44 +336,21 @@ class LocalIndex:
                         )
                     )
             filled = {}
-            for t in need:
-                runs = per_term[t]
+            for t, runs in per_term.items():
                 if not runs:
-                    entry = (
+                    filled[t] = (
                         np.empty(0, np.uint64),
                         np.empty(0, np.uint64),
                         np.empty(0, np.uint64),
                     )
                 else:
-                    ids = np.concatenate([r[0] for r in runs])
-                    tfs = np.concatenate([r[1] for r in runs])
-                    dls = np.concatenate([r[2] for r in runs])
-                    entry = (ids, tfs, dls)
-                filled[t] = entry
-            with self._memo_lock:
-                for t, entry in filled.items():
-                    if t not in self._post_memo:
-                        self._post_memo[t] = entry
-                        self._post_memo_rows += int(entry[0].size)
-                # refresh ALL current-query terms BEFORE evicting,
-                # and never evict below their count: eviction can
-                # never take a term this call is about to return
-                # (ADVICE r04, high — and the return dict holds the
-                # array references directly, so even a concurrent
-                # evictor cannot invalidate them)
-                floor = 0
-                for t in dict.fromkeys(terms):
-                    if t in self._post_memo:
-                        self._post_memo.move_to_end(t)
-                        floor += 1
-                while (
-                    self._post_memo_rows > _POSTINGS_MEMO_CAP_ROWS
-                    and len(self._post_memo) > floor
-                ):
-                    _, old = self._post_memo.popitem(last=False)
-                    self._post_memo_rows -= int(old[0].size)
-            out.update(filled)
-        return out
+                    filled[t] = tuple(
+                        np.concatenate([r[i] for r in runs])
+                        for i in range(3)
+                    )
+            return filled
+
+        return self._post_memo.fetch(terms, fill)
 
     def _resolve_docs(
         self, doc_ids: np.ndarray, with_title: bool = False
@@ -471,16 +390,8 @@ class LocalIndex:
             return tbl.to_pandas()
 
         ids = [int(i) for i in np.unique(ids64)]
-        with self._memo_lock:
-            held = {
-                i: self._doc_memo[i]
-                for i in ids
-                if i in self._doc_memo
-            }
-            for i in held:
-                self._doc_memo.move_to_end(i)
-        missing = [i for i in ids if i not in held]
-        if missing:
+
+        def fill(missing):
             tbl = ds_docs.to_table(
                 filter=pc.field("doc_id").isin(missing),
                 columns=read_cols,
@@ -499,22 +410,9 @@ class LocalIndex:
                     titles,
                 )
             }
-            with self._memo_lock:
-                for i in missing:
-                    entry = found.get(i)
-                    held[i] = entry
-                    self._doc_memo[i] = entry
-                # refresh current ids first; evict only beyond them
-                floor = 0
-                for i in ids:
-                    if i in self._doc_memo:
-                        self._doc_memo.move_to_end(i)
-                        floor += 1
-                while (
-                    len(self._doc_memo) > _DOC_MEMO_CAP
-                    and len(self._doc_memo) > floor
-                ):
-                    self._doc_memo.popitem(last=False)
+            return {i: found.get(i) for i in missing}
+
+        held = self._doc_memo.fetch(ids, fill)
         rows = [
             (i, *held[i]) for i in ids if held[i] is not None
         ]

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from search_engine_spark.functions.textproc import lemma_counts_py, tokenize_py
+from search_engine_spark.lru import index_memo
 from search_engine_spark.operators.postings import InvertedIndex
 
 
@@ -45,15 +46,37 @@ def analyze_query(query: str, lang: str = "english",
     return sorted(set(tokenize_py(query, lang)))
 
 
+# Per-index-object memo entry cap: a long-lived serving process
+# cycling through a crawl-wide vocabulary must not grow the df/block
+# metadata memos without bound (same rationale as the lemmatizer's
+# _LEMMA_MEMO_CAP).  Shared with the WAND block-metadata memos.
+_MEMO_CAP = 262_144
+
+
+def robertson_idf(n: int, dfs: dict[str, int]) -> dict[str, float]:
+    """idf = ln((N − df + 0.5) / (df + 0.5))  [Robertson; may go
+    negative] per term of ``dfs``; the one IDF rule of the Spark and
+    the driver-local scorers."""
+    out = {}
+    for t, df in dfs.items():
+        if df <= 0:
+            continue  # absent from the dictionary: dropped (R1)
+        ratio = (n - df + 0.5) / (df + 0.5)
+        # Normative: global df may exceed local N under a site
+        # restriction (the quirk); the reference's Math.log(<=0) would
+        # be NaN, poisoning all scores — we drop such terms instead.
+        if ratio > 0:
+            out[t] = math.log(ratio)
+    return out
+
+
 def query_term_idf(
     index: InvertedIndex,
     terms: list[str],
     sites: list[str] | None = None,
 ) -> dict[str, float]:
-    """IDF per query term — R11 with the global-df/local-N quirk.
-
-    idf = ln((N − df + 0.5) / (df + 0.5))  [Robertson; may go negative]
-    """
+    """IDF per query term — R11 with the global-df/local-N quirk
+    (:func:`robertson_idf`)."""
     if not terms:
         return {}
     if sites:
@@ -65,54 +88,22 @@ def query_term_idf(
         n = int(rows[0]["n"] or 0)
     else:
         n = index.n_docs
+
     # per-index-object df memo: repeated-vocab queries skip the
     # term-dictionary probe job entirely (serving path: one fewer
     # Spark job per query).  df is GLOBAL (unaffected by `sites`), so
-    # the memo is valid across site restrictions; it dies with the
-    # index object, and maintenance ops hand back fresh objects
-    # (load_compact_index / open_index re-read the descriptor), so
-    # it can never serve stale df across a commit.
-    memo = getattr(index, "_df_memo", None)
-    if memo is None:
-        try:
-            memo = {}
-            object.__setattr__(index, "_df_memo", memo)
-        except Exception:  # frozen dataclass: just skip memoization
-            memo = None
-    missing = (
-        terms if memo is None
-        else [t for t in terms if t not in memo]
-    )
-    if missing:
+    # the memo is valid across site restrictions.
+    def fill(missing):
         df_rows = (
             index.term_stats.filter(F.col("term").isin(missing))
             .collect()
         )
         found = {r["term"]: int(r["df"]) for r in df_rows}
-        if memo is not None:
-            for t in missing:
-                # 0 = definitely absent from the dictionary
-                memo[t] = found.get(t, 0)
-            # bound the memo for long-lived serving processes;
-            # the current query's terms are refreshed and exempt from
-            # eviction so a term can never be silently dropped from
-            # scoring by the very call that inserted it
-            from search_engine_spark.plans.wand import _memo_evict
+        # 0 = definitely absent from the dictionary
+        return {t: found.get(t, 0) for t in missing}
 
-            _memo_evict(memo, keep=terms)
-    lookup = memo if memo is not None else found
-    out = {}
-    for t in terms:
-        df = lookup.get(t, 0)
-        if df <= 0:
-            continue  # absent from the dictionary: dropped (R1)
-        ratio = (n - df + 0.5) / (df + 0.5)
-        # Normative: global df may exceed local N under a site
-        # restriction (the quirk); the reference's Math.log(<=0) would
-        # be NaN, poisoning all scores — we drop such terms instead.
-        if ratio > 0:
-            out[t] = math.log(ratio)
-    return out
+    memo = index_memo(index, "_df_memo", _MEMO_CAP)
+    return robertson_idf(n, memo.fetch(terms, fill))
 
 
 def bm25_term_score_col(

@@ -27,7 +27,9 @@ from search_engine_spark.operators.compact import (
     bucket_of,
     decode_segments,
 )
+from search_engine_spark.lru import index_memo
 from search_engine_spark.plans.search import (
+    _MEMO_CAP,
     analyze_query,
     bm25_term_score_col,
     query_term_idf,
@@ -37,25 +39,6 @@ from search_engine_spark.plans.search import (
 # only skipped when its upper bound is *strictly* below (1 - EPS) of the
 # current kth score, so equal-score/url-tiebreak candidates survive.
 _EPS = 1e-9
-
-# Per-index-object memo entry cap: a long-lived serving process
-# cycling through a crawl-wide vocabulary must not grow the df/block
-# metadata memos without bound (same rationale as the lemmatizer's
-# _LEMMA_MEMO_CAP).  Eviction is insertion-order (oldest first), but
-# the CURRENT query's keys are refreshed to the back and exempted —
-# otherwise a hot key inserted early could be evicted during the very
-# call that needs it, silently dropping it from scoring.
-_MEMO_CAP = 262_144
-
-
-def _memo_evict(memo: dict, keep=()) -> None:
-    """Bound ``memo``, never evicting a key in ``keep``."""
-    present = [k for k in keep if k in memo]
-    for k in present:
-        memo[k] = memo.pop(k)
-    floor = len(set(present))
-    while len(memo) > _MEMO_CAP and len(memo) > floor:
-        memo.pop(next(iter(memo)))
 
 
 def _segs_for_terms(cidx: CompactIndex, terms: list[str]) -> DataFrame:
@@ -68,61 +51,37 @@ def _segs_for_terms(cidx: CompactIndex, terms: list[str]) -> DataFrame:
     return segs.filter(F.col("term").isin(terms))
 
 
-def _meta_memo(cidx: CompactIndex, name: str) -> dict | None:
-    """Per-index-object metadata memo (same invalidation argument as
-    the query_term_idf df memo: block metadata is immutable for a
-    given index object — maintenance commits hand back fresh objects
-    via load_compact_index/open_index)."""
-    memo = getattr(cidx, name, None)
-    if memo is None:
-        try:
-            memo = {}
-            object.__setattr__(cidx, name, memo)
-        except Exception:
-            memo = None
-    return memo
-
-
 def _block_meta(cidx: CompactIndex, term: str) -> list:
     """Collected (shard, block_id, count, max_u, min_u) rows of one
-    term — memoized so repeated-vocab serving queries skip the
-    metadata probe job."""
-    memo = _meta_memo(cidx, "_block_meta_memo")
-    if memo is not None and term in memo:
-        return memo[term]
-    rows = (
-        _segs_for_terms(cidx, [term])
-        .select("shard", "block_id", "count", "max_u", "min_u")
-        .collect()
-    )
-    if memo is not None:
-        memo[term] = rows
-        _memo_evict(memo, keep=(term,))
-    return rows
+    term — memoized per index object (lru.index_memo) so
+    repeated-vocab serving queries skip the metadata probe job."""
+
+    def fill(_missing):
+        return {
+            term: _segs_for_terms(cidx, [term])
+            .select("shard", "block_id", "count", "max_u", "min_u")
+            .collect()
+        }
+
+    memo = index_memo(cidx, "_block_meta_memo", _MEMO_CAP)
+    return memo.fetch([term], fill)[term]
 
 
 def _term_bounds(cidx: CompactIndex, terms: list[str]) -> dict:
     """{term: (max max_u, min min_u)} across each term's blocks,
-    memoized per index object."""
-    memo = _meta_memo(cidx, "_term_bounds_memo")
-    missing = (
-        [t for t in terms if t not in memo]
-        if memo is not None else list(terms)
-    )
-    found = {}
-    if missing:
+    memoized per index object (terms without blocks are left out)."""
+
+    def fill(missing):
         rows = (
             _segs_for_terms(cidx, missing)
             .groupBy("term")
             .agg(F.max("max_u").alias("mx"), F.min("min_u").alias("mn"))
             .collect()
         )
-        found = {r["term"]: (r["mx"], r["mn"]) for r in rows}
-        if memo is not None:
-            memo.update(found)
-            _memo_evict(memo, keep=terms)
-    src = memo if memo is not None else found
-    return {t: src[t] for t in terms if t in src}
+        return {r["term"]: (r["mx"], r["mn"]) for r in rows}
+
+    memo = index_memo(cidx, "_term_bounds_memo", _MEMO_CAP)
+    return memo.fetch(terms, fill)
 
 
 def _term_ub(idf_t: float, max_u: float, min_u: float) -> float:

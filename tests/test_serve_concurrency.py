@@ -1,5 +1,5 @@
 """Serving under concurrency: the shared-LocalIndex memo protocol
-(plans/local_serve.py ``_memo_lock``) and the HTTP endpoint's
+(search_engine_spark/lru.py ``BoundedLRU.fetch``) and the HTTP endpoint's
 per-request generation freshness (jobs/serve.py) — VERDICT r04
 next-round item #4 plus the ADVICE r04 eviction-race fixes.
 
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 import search_engine_spark.plans.local_serve as ls
 from search_engine_spark.config import EngineConfig
+from search_engine_spark.lru import BoundedLRU
 from search_engine_spark.plans.build import build_and_write
 from search_engine_spark.plans.incremental import (
     append_pages,
@@ -96,20 +97,79 @@ def test_eviction_exempts_current_call(built, monkeypatch):
         assert got == baseline
 
 
-def test_wand_memo_evict_keeps_current_terms(monkeypatch):
-    """plans/wand._memo_evict with keep=: the current query's keys
-    are refreshed and survive; only older keys are dropped."""
-    import search_engine_spark.plans.wand as wand
+def _filled(memo, keys):
+    """Fill ``memo`` with ``keys`` one call each (insertion order =
+    age), values = the key's index."""
+    for i, k in enumerate(keys):
+        memo.fetch([k], lambda miss, i=i: {m: i for m in miss})
 
-    monkeypatch.setattr(wand, "_MEMO_CAP", 3)
-    memo = {f"t{i}": i for i in range(6)}  # over cap
-    wand._memo_evict(memo, keep=("t0", "t1"))
+
+def test_wand_memo_evict_keeps_current_terms():
+    """The bounded LRU behind every memo (the WAND block-metadata and
+    df memos included): the current call's keys are refreshed and
+    survive; only older keys are dropped."""
+    memo = BoundedLRU(3)
+    _filled(memo, [f"t{i}" for i in range(3)])
+    got = memo.fetch(["t0", "t1", "new"], lambda miss: {m: 9 for m in miss})
+    assert got == {"t0": 0, "t1": 1, "new": 9}
     assert "t0" in memo and "t1" in memo  # refreshed, not evicted
+    assert "t2" not in memo  # the oldest key beyond them went
     assert len(memo) == 3  # cap honored beyond the kept keys
     # keep larger than cap: floor wins, nothing kept is lost
-    memo = {f"k{i}": i for i in range(5)}
-    wand._memo_evict(memo, keep=tuple(f"k{i}" for i in range(5)))
-    assert len(memo) == 5
+    keys = [f"k{i}" for i in range(5)]
+    got = memo.fetch(keys, lambda miss: {m: 1 for m in miss})
+    assert set(got) == set(keys) and len(memo) == 5
+    assert all(k in memo for k in keys)
+
+
+def test_bounded_lru_weighted_eviction():
+    """Weighted by row count (the postings memo): the summed weight
+    is bounded, oldest entries go first, and a current-call entry
+    heavier than the whole cap is still kept and returned."""
+    memo = BoundedLRU(10, weight=len)
+    for k in "abc":
+        memo.fetch([k], lambda miss: {m: [0] * 4 for m in miss})
+    assert list(memo) == ["b", "c"]  # 12 rows > 10: oldest "a" went
+    memo.fetch(["b"], lambda miss: {})  # hit: refreshes "b"
+    memo.fetch(["d"], lambda miss: {m: [0] * 3 for m in miss})
+    assert list(memo) == ["b", "d"]  # "c" was older than "b" now
+    big = memo.fetch(["e"], lambda miss: {m: [0] * 50 for m in miss})
+    assert len(big["e"]) == 50 and list(memo) == ["e"]
+    # a key the fill leaves out is neither memoized nor returned; the
+    # oversized "e" is no longer current, so the cap now drops it
+    assert memo.fetch(["zz"], lambda miss: {}) == {}
+    assert "zz" not in memo and memo == {}
+
+
+def test_bounded_lru_threads_keep_accounting():
+    """16 threads over one weighted memo with a tiny cap and a short
+    switch interval: every call gets all its keys with the right
+    values, and the summed weight always matches the entries held (a
+    lost update in the insert/evict bookkeeping would break it)."""
+    import sys
+
+    memo = BoundedLRU(12, weight=len)
+
+    def fill(miss):
+        return {k: "x" * (1 + int(k[1:]) % 4) for k in miss}
+
+    def worker(seed):
+        for i in range(300):
+            keys = [f"k{(seed * 7 + i * j) % 40}" for j in range(3)]
+            got = memo.fetch(keys, fill)
+            assert got == fill(list(dict.fromkeys(keys)))
+        return True
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            done = list(pool.map(worker, range(16), timeout=120))
+    finally:
+        sys.setswitchinterval(old)
+    assert done == [True] * 16
+    assert memo._total == sum(len(v) for v in memo.values())
+    assert memo._total <= 12 or len(memo) <= 3
 
 
 def test_concurrent_search_under_memo_churn(built, monkeypatch):

@@ -201,6 +201,34 @@ def test_index_page_returns_501(served):
         assert json.loads(e.read())["result"] is False
 
 
+def test_failed_freshness_probe_warns_and_serves_warm_gen(
+    served, monkeypatch, capsys
+):
+    """When every freshness retry fails, the warm generation keeps
+    answering and one stderr line names the generation served."""
+    import search_engine_spark.plans.local_serve as ls
+
+    base, out, _ = served
+    q = urllib.parse.quote("crystal falcon nebula")
+    status, warm = _get(f"{base}/api/search?query={q}&limit=5")
+    assert status == 200
+
+    def gone(*args, **kwargs):
+        raise FileNotFoundError("stats.json")
+
+    monkeypatch.setattr(ls, "open_local_index", gone)
+    capsys.readouterr()
+    status, body = _get(f"{base}/api/search?query={q}&limit=5")
+    assert status == 200 and body == warm
+    lines = [
+        json.loads(line)
+        for line in capsys.readouterr().err.splitlines()
+        if "freshness probe" in line
+    ]
+    assert len(lines) == 1
+    assert lines[0]["gen"] == open_local_index(out).gen
+
+
 def test_freshness_across_maintenance(served, spark):
     """A maintenance commit swaps the served generation: deleted
     docs disappear from the endpoint without a restart."""

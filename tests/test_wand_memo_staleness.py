@@ -12,17 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.config import EngineConfig
+from search_engine_spark.lru import BoundedLRU
 from search_engine_spark.plans.build import build_and_write
 from search_engine_spark.plans.incremental import (
     append_pages,
     open_index,
 )
 from search_engine_spark.plans.search import query_term_idf
-from search_engine_spark.plans.wand import (
-    _block_meta,
-    _memo_evict,
-    search_compact,
-)
+from search_engine_spark.plans.wand import _block_meta, search_compact
 from search_engine_spark.sources.fixtures import pages_df
 
 
@@ -95,14 +92,9 @@ def test_reopen_after_append_never_serves_stale_memo(spark, built):
 
 
 def test_memo_cap_evicts_oldest():
-    from search_engine_spark.plans import wand
-
-    memo = {f"t{i}": i for i in range(10)}
-    old_cap = wand._MEMO_CAP
-    try:
-        wand._MEMO_CAP = 4
-        _memo_evict(memo)
-    finally:
-        wand._MEMO_CAP = old_cap
+    memo = BoundedLRU(4)
+    for i in range(10):
+        memo.fetch([f"t{i}"], lambda miss, i=i: {m: i for m in miss})
     assert len(memo) == 4
     assert list(memo) == ["t6", "t7", "t8", "t9"]
+    assert memo == {"t6": 6, "t7": 7, "t8": 8, "t9": 9}

@@ -76,8 +76,8 @@ def run_build(cpus: int, pages: int, zpath: str, tmp: str) -> dict:
         "--conf", f"spark.executorEnv.MALLOC_MMAP_THRESHOLD_={1 << 30}",
         "--conf", "spark.executorEnv.MALLOC_TRIM_THRESHOLD_=-1",
         "--py-files", zpath,
-        # 2 tasks per core: measured sweet spot (tools/scale_probe.py,
-        # part-mult 1/2/3/4 A-B at both levels).  1/core leaves no
+        # 2 tasks per core: measured sweet spot (part-mult 1/2/3/4
+        # A-B runs at both levels).  1/core leaves no
         # slack for stragglers (one slow task stalls the stage);
         # 4/core doubles task count and the driver's serial
         # schedule/launch/commit work grows with task count — at

@@ -39,6 +39,12 @@ def _fs(spark: SparkSession, path: str):
     return jfs, jpath
 
 
+def _scheme(spark: SparkSession, path: str) -> str:
+    """Scheme of the FileSystem ``path`` resolves to (``file`` for
+    driver-local; scheme-less paths follow ``fs.defaultFS``)."""
+    return str(_fs(spark, path)[0].getUri().getScheme())
+
+
 def _session(spark: SparkSession | None) -> SparkSession:
     if spark is not None:
         return spark
@@ -135,15 +141,16 @@ def rename_overwrite(
     failure — readers like jobs/serve.py retry and keep their warm
     generation), never a partial file, because ``src`` is always
     fully written before the call."""
-    # Scheme-less paths are driver-local ONLY when the just-written
-    # source actually exists on the local disk — on a cluster whose
-    # fs.defaultFS is hdfs://, scheme-less paths resolve to HDFS (the
-    # temp file was written there via the Hadoop API and is NOT on
-    # the driver's disk), so those fall through to the Hadoop rename.
+    # Scheme-less paths are driver-local ONLY when they resolve to the
+    # local FileSystem — on a cluster whose fs.defaultFS is hdfs://,
+    # they resolve to HDFS (even if a same-named file happens to sit
+    # on the driver's disk), so those fall through to the Hadoop
+    # rename.
+    spark = _session(spark)
     if (
         "://" not in src
         and "://" not in dst
-        and os.path.exists(src)
+        and _scheme(spark, src) == "file"
     ):
         # Hadoop's LocalFileSystem keeps .name.crc checksum sidecars
         # next to files it wrote; swapping the data behind its back
@@ -164,7 +171,6 @@ def rename_overwrite(
         if os.path.exists(src_crc):
             os.replace(src_crc, dst_crc)
         return
-    spark = _session(spark)
     jvm = spark._jvm
     jsrc = jvm.org.apache.hadoop.fs.Path(src)
     jdst = jvm.org.apache.hadoop.fs.Path(dst)

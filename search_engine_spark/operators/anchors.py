@@ -36,8 +36,6 @@ Pipeline (everything JVM-side, no Python on any hot path):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -165,23 +163,19 @@ def search_anchored(
     per-term df aggregate is metadata-sized; wlen joins ride the
     near-unique id key.  No corpus scan, no UDF.
     """
-    from search_engine_spark.plans.search import analyze_query
+    from search_engine_spark.plans.search import (
+        empty_ranked,
+        paginate,
+        query_terms,
+        robertson_idf,
+    )
 
     id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
     w = float(anchor_weight)
 
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
-
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
+    terms = query_terms(index, query, lang, analyzer, use_stoplist)
+    empty = empty_ranked(index.doc_lens.select(id_col, "site"))
     if not terms:
         return empty
 
@@ -233,13 +227,7 @@ def search_anchored(
         .agg(F.count(F.lit(1)).alias("df"))
         .collect()
     }
-    idf = {}
-    for t in terms:
-        if t not in dfreq:
-            continue
-        ratio = (n_docs - dfreq[t] + 0.5) / (dfreq[t] + 0.5)
-        if ratio > 0:
-            idf[t] = math.log(ratio)
+    idf = robertson_idf(n_docs, {t: dfreq.get(t, 0) for t in terms})
     if not idf:
         return empty
 
@@ -266,6 +254,4 @@ def search_anchored(
         .groupBy(id_col, "site")
         .agg(F.sum("term_score").alias("score"))
     )
-    from search_engine_spark.plans.search import _paginate
-
-    return _paginate(scored, id_col, 0, limit)
+    return paginate(scored, id_col, 0, limit)

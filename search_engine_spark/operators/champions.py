@@ -30,10 +30,11 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
 from search_engine_spark.plans.search import (
-    _paginate,
-    analyze_query,
     bm25_term_score_col,
+    empty_ranked,
+    paginate,
     query_term_idf,
+    query_terms,
 )
 
 
@@ -85,20 +86,10 @@ def search_champions(
     id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
 
-    terms = analyze_query(query, lang, analyzer)
-    stop = set(index.stoplist)
-    terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(index, terms)
-    terms = sorted(t for t in terms if t in idf)
-
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
+    idf = query_term_idf(index, query_terms(index, query, lang, analyzer))
+    terms = sorted(idf)
     if not terms:
-        return empty
+        return empty_ranked(index.doc_lens.select(id_col, "site"))
 
     champ = (
         champions
@@ -133,4 +124,4 @@ def search_champions(
                 index, query, offset=offset, limit=limit, lang=lang,
                 analyzer=analyzer, candidates="union",
             )
-    return _paginate(scored, id_col, offset, limit)
+    return paginate(scored, id_col, offset, limit)

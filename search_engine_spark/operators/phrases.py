@@ -397,6 +397,7 @@ def proximity_search(
     """
     from search_engine_spark.plans.search import (
         analyze_query,
+        paginate,
         search,
     )
 
@@ -432,15 +433,7 @@ def proximity_search(
         )
         .drop("span", "rn")
     )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        boosted.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(limit)
-        .withColumn("rn", F.row_number().over(w))
-        .select(id_col, "site", "score", "rn")
-    )
+    return paginate(boosted, id_col, 0, limit)
 
 
 def near_match(
@@ -485,28 +478,22 @@ def near_search(
     positional pass + one scoring join, both O(query-term postings).
     """
     from search_engine_spark.plans.search import (
-        analyze_query,
         bm25_term_score_col,
+        empty_ranked,
+        paginate,
         query_term_idf,
+        query_terms,
     )
 
     id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(index, terms, sites)
-    terms = sorted(t for t in terms if t in idf)
-
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
+    idf = query_term_idf(
+        index, query_terms(index, query, lang, analyzer, use_stoplist),
+        sites,
     )
+    terms = sorted(idf)
     if not terms:
-        return empty
+        return empty_ranked(index.doc_lens.select(id_col, "site"))
 
     pp = positional_postings(enriched, id_col, tokens_col_name)
     cand_ids = near_match(pp, terms, slop, id_col).select(id_col)
@@ -527,17 +514,7 @@ def near_search(
         .groupBy(id_col, "site")
         .agg(F.sum("term_score").alias("score"))
     )
-    from pyspark.sql import Window
-
-    top = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
-        offset + limit
-    )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit)
 
 
 # ---------------------------------------------------------------------------

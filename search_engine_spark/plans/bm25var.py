@@ -19,21 +19,21 @@ and Robertson IDF with negatives kept:
       c′      = tfn / (1−b+b·len/avg)
       w(t, d) = idf_t · (k1+1)·(c′+δ) / (k1 + c′ + δ)
 
-Both are scored over the same candidate semantics as the forward
-path (reference R13 rarest-term by default, "union"/"all" available)
-via the SAME single candidates × query-term postings join — only the
-per-posting column expression differs, so plan shape, shuffles and
-broadcast behavior are byte-identical to plain ``search``.  δ
-defaults: 1.0 (BM25+), 0.5 (BM25L) — the papers' recommendations.
+Both are scored by the forward path's own candidate-and-join stage
+(``plans.search._scored_pool``: reference R13 rarest-term by default,
+"union"/"all" available) — only the per-posting column expression
+differs, so plan shape, shuffles and broadcast behavior are
+byte-identical to plain ``search``.  δ defaults: 1.0 (BM25+), 0.5
+(BM25L) — the papers' recommendations.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
-from search_engine_spark.plans.search import analyze_query, query_term_idf
+from search_engine_spark.plans.search import _scored_pool, paginate
 
 
 def bm25_variant_term_score_col(
@@ -88,70 +88,17 @@ def search_bm25_variant(
         raise ValueError(f"unknown BM25 variant {variant!r}")
     if delta is None:
         delta = 1.0 if variant == "plus" else 0.5
-    id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
 
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(index, terms, sites)
-    terms = [t for t in terms if t in idf]
+    def term_score(idf):
+        return bm25_variant_term_score_col(
+            idf, k1, b, index.avg_len, variant, delta
+        )
 
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
+    scored, empty = _scored_pool(
+        index, query, sites, lang, analyzer, use_stoplist,
+        candidates=candidates, term_score=term_score,
     )
-    if not terms:
+    if scored is None:
         return empty
-
-    doc_lens = index.doc_lens
-    if sites:
-        doc_lens = doc_lens.filter(F.col("site").isin(sites))
-
-    if candidates == "union":
-        cand_ids = (
-            index.postings.filter(F.col("term").isin(terms))
-            .select(id_col)
-            .distinct()
-        )
-    elif candidates == "all":
-        cand_ids = (
-            index.postings.filter(F.col("term").isin(terms))
-            .groupBy(id_col)
-            .agg(F.count("term").alias("_nt"))
-            .filter(F.col("_nt") == len(terms))
-            .select(id_col)
-        )
-    else:
-        rarest = sorted(terms, key=lambda t: (-idf[t], t))[0]
-        cand_ids = index.postings.filter(
-            F.col("term") == rarest
-        ).select(id_col)
-
-    cand = cand_ids.join(
-        doc_lens.select(id_col, "site", "doc_len"), id_col
-    )
-    qpost = index.postings.filter(F.col("term").isin(terms))
-    scored = (
-        cand.join(qpost, id_col, "inner")
-        .withColumn(
-            "term_score",
-            bm25_variant_term_score_col(
-                idf, k1, b, index.avg_len, variant, delta
-            ),
-        )
-        .groupBy(id_col, "site")
-        .agg(F.sum("term_score").alias("score"))
-    )
-    top = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
-        offset + limit
-    )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
-    )
+    return paginate(scored, index.id_col, offset, limit)

@@ -55,7 +55,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.functions.textproc import tokenize_py
@@ -63,6 +63,9 @@ from search_engine_spark.operators.postings import InvertedIndex
 from search_engine_spark.plans.search import (
     analyze_query,
     bm25_term_score_col,
+    drop_stopwords,
+    empty_ranked,
+    paginate,
     query_term_idf,
 )
 
@@ -187,9 +190,8 @@ def _analyze_buckets(
     )
     must_not = _an(parsed["must_not"])
     if use_stoplist:
-        stop = set(index.stoplist)
-        must = [t for t in must if t not in stop]
-        should = [t for t in should if t not in stop]
+        must = drop_stopwords(index, must)
+        should = drop_stopwords(index, should)
 
     scoring = sorted(set(must) | set(should))
     idf = query_term_idf(index, scoring, sites)
@@ -225,15 +227,9 @@ def search_boolean(
         index, parsed, sites, lang, analyzer, use_stoplist
     )
 
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
     # [] (an empty intersection of restrictions) ≠ None (unrestricted)
     if not scoring or (sites is not None and not sites):
-        return empty
+        return empty_ranked(index.doc_lens.select(id_col, "site"))
     if (
         parsed["phrases"] or parsed["titles"] or parsed["nears"]
     ) and enriched is None:
@@ -316,15 +312,7 @@ def search_boolean(
         .groupBy(id_col, "site")
         .agg(F.sum("term_score").alias("score"))
     )
-    top = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
-        offset + limit
-    )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit)
 
 
 def search_boolean_compact(
@@ -368,15 +356,9 @@ def search_boolean_compact(
         cidx, parsed, sites, lang, analyzer, use_stoplist
     )
 
-    empty = (
-        cidx.doc_map.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
     # [] (an empty intersection of restrictions) ≠ None (unrestricted)
     if not scoring or (sites is not None and not sites):
-        return empty
+        return empty_ranked(cidx.doc_map.select(id_col, "site"))
     if (
         (parsed["phrases"] or parsed["nears"])
         and enriched is None
@@ -518,12 +500,6 @@ def search_boolean_compact(
     resolved = scored.join(
         cidx.doc_map.select("doc_id", id_col, "site"), "doc_id"
     )
-    top = resolved.orderBy(F.desc("score"), F.asc(id_col)).limit(
-        offset + limit
-    )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
+    return paginate(
+        resolved, id_col, offset, limit, [id_col, "site", "score"]
     )

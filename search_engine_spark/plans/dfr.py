@@ -39,12 +39,16 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
 from search_engine_spark.plans.lm import collection_tf
-from search_engine_spark.plans.search import analyze_query
+from search_engine_spark.plans.search import (
+    empty_ranked,
+    paginate,
+    query_terms,
+)
 
 #: log2(e) = 1/ln(2) — the one constant PL2 needs; shared verbatim
 #: with the oracle SQL generator so both engines use the same double.
@@ -74,21 +78,11 @@ def search_pl2(
     if not c > 0.0:
         raise ValueError("PL2 needs c > 0")
     id_col = index.id_col
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
+    terms = query_terms(index, query, lang, analyzer, use_stoplist)
     cf = collection_tf(index, terms)
     terms = sorted(t for t in terms if cf.get(t, 0) > 0)
-
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
     if not terms:
-        return empty
+        return empty_ranked(index.doc_lens.select(id_col, "site"))
 
     n_docs = float(index.n_docs)
     lam_col = F.create_map(
@@ -132,15 +126,7 @@ def search_pl2(
         .groupBy(id_col, "site")
         .agg(F.sum("term_part").alias("score"))
     )
-    top = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
-        offset + limit
-    )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit)
 
 
 def search_pl2_compact(
@@ -160,11 +146,9 @@ def search_pl2_compact(
     present-term scoring touches."""
     from search_engine_spark.plans.wand import logical_view
 
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(cidx.stoplist)
-        terms = [t for t in terms if t not in stop]
-    view = logical_view(cidx, terms)
+    view = logical_view(
+        cidx, query_terms(cidx, query, lang, analyzer, use_stoplist)
+    )
     return search_pl2(
         view, query, c=c, sites=sites, offset=offset, limit=limit,
         lang=lang, analyzer=analyzer, use_stoplist=use_stoplist,

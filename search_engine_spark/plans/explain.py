@@ -24,9 +24,9 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
 from search_engine_spark.plans.search import (
-    analyze_query,
     bm25_term_score_col,
     query_term_idf,
+    query_terms,
 )
 
 
@@ -47,12 +47,11 @@ def explain_score(
     (same column expression, same float order per term)."""
     id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(index, sorted(set(terms)), sites)
-    terms = sorted(t for t in set(terms) if t in idf)
+    idf = query_term_idf(
+        index, query_terms(index, query, lang, analyzer, use_stoplist),
+        sites,
+    )
+    terms = sorted(idf)
 
     empty = (
         index.postings.select("term", "tf")

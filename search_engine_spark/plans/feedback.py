@@ -38,18 +38,18 @@ fb_terms)-term union search — no corpus scan anywhere.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
 from search_engine_spark.plans.search import (
-    _paginate,
     _scored_pool,
     analyze_query,
     bm25_term_score_col,
+    empty_ranked,
+    paginate,
     query_term_idf,
+    query_terms,
 )
 
 
@@ -134,11 +134,8 @@ def search_prf(
     id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
 
-    terms = analyze_query(query, lang, analyzer)
-    stop = set(index.stoplist)
-    terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(index, terms)
-    weights = {t: 1.0 for t in terms if t in idf}
+    idf = query_term_idf(index, query_terms(index, query, lang, analyzer))
+    weights = {t: 1.0 for t in idf}
 
     exp = prf_expansion_terms(
         index, query, fb_docs, fb_terms, lang, analyzer
@@ -149,15 +146,9 @@ def search_prf(
             weights[t] = float(beta)
             idf[t] = exp_idf[t]
 
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
     all_terms = sorted(weights)
     if not all_terms:
-        return empty
+        return empty_ranked(index.doc_lens.select(id_col, "site"))
 
     wt_col = F.create_map(
         *[x for t in all_terms for x in (F.lit(t), F.lit(weights[t]))]
@@ -180,4 +171,4 @@ def search_prf(
         .groupBy(id_col, "site")
         .agg(F.sum("term_score").alias("score"))
     )
-    return _paginate(scored, id_col, offset, limit)
+    return paginate(scored, id_col, offset, limit)

@@ -45,9 +45,11 @@ from pyspark.sql import functions as F
 from search_engine_spark import fsutil
 from search_engine_spark.operators.postings import InvertedIndex
 from search_engine_spark.plans.search import (
-    analyze_query,
     bm25_term_score_col,
+    empty_ranked,
+    paginate,
     query_term_idf,
+    query_terms,
 )
 
 IMPACTS_DIR = "impacts"
@@ -135,21 +137,12 @@ def impact_topk(
     :func:`quantize_postings` result across queries (the normal
     deployment shape) instead of re-quantizing per query."""
     id_col = index.id_col
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]  # R14/R19
-    idf = query_term_idf(index, terms)
-    terms = sorted(t for t in terms if t in idf)
-
-    empty = (
-        index.doc_lens.select(id_col)
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
+    idf = query_term_idf(
+        index, query_terms(index, query, lang, analyzer, use_stoplist)
     )
+    terms = sorted(idf)
     if not terms:
-        return empty
+        return empty_ranked(index.doc_lens.select(id_col))
 
     if quantized is None:
         quantized, _ = quantize_postings(index, bits)
@@ -165,14 +158,7 @@ def impact_topk(
         .groupBy(id_col)
         .agg(F.sum("term_score").alias("score"))
     )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(offset + limit)
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit)
 
 
 def rescore_topk(
@@ -217,21 +203,12 @@ def rescore_topk(
     )
     cand = first.select(id_col)
 
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(index, terms)
-    terms = sorted(t for t in terms if t in idf)
-
-    empty = (
-        index.doc_lens.select(id_col)
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
+    idf = query_term_idf(
+        index, query_terms(index, query, lang, analyzer, use_stoplist)
     )
+    terms = sorted(idf)
     if not terms:
-        return empty
+        return empty_ranked(index.doc_lens.select(id_col))
 
     k1, b = index.config.bm25.k1, index.config.bm25.b
     qpost = index.postings.filter(F.col("term").isin(terms))
@@ -246,14 +223,7 @@ def rescore_topk(
         .groupBy(id_col)
         .agg(F.sum("term_score").alias("score"))
     )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(offset + limit)
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit)
 
 
 def write_impacts(cidx, out_dir: str, bits: int = 8) -> dict:
@@ -392,21 +362,12 @@ def impact_topk_persisted(
             f"{cidx.n_docs} — rerun write_impacts after maintenance"
         )
 
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(cidx.stoplist)
-        terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(cidx, terms)
-    terms = sorted(t for t in terms if t in idf)
-
-    empty = (
-        cidx.doc_map.select(id_col)
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
+    idf = query_term_idf(
+        cidx, query_terms(cidx, query, lang, analyzer, use_stoplist)
     )
+    terms = sorted(idf)
     if not terms:
-        return empty
+        return empty_ranked(cidx.doc_map.select(id_col))
 
     buckets = sorted({bucket_of(t, meta["n_buckets"]) for t in terms})
     qpost = impacts.filter(
@@ -424,14 +385,7 @@ def impact_topk_persisted(
         .agg(F.sum("term_score").alias("score"))
         .join(cidx.doc_map.select("doc_id", id_col), "doc_id")
     )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(offset + limit)
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit, [id_col, "score"])
 
 
 def rescore_topk_persisted(
@@ -463,21 +417,12 @@ def rescore_topk_persisted(
     )
     cand = first.select(id_col)
 
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(cidx.stoplist)
-        terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(cidx, terms)
-    terms = sorted(t for t in terms if t in idf)
-
-    empty = (
-        cidx.doc_map.select(id_col)
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
+    idf = query_term_idf(
+        cidx, query_terms(cidx, query, lang, analyzer, use_stoplist)
     )
+    terms = sorted(idf)
     if not terms:
-        return empty
+        return empty_ranked(cidx.doc_map.select(id_col))
 
     view = logical_view(cidx, terms)
     k1, b = cidx.config.bm25.k1, cidx.config.bm25.b
@@ -492,14 +437,7 @@ def rescore_topk_persisted(
         .groupBy(id_col)
         .agg(F.sum("term_score").alias("score"))
     )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(offset + limit)
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit)
 
 
 def prune_postings(

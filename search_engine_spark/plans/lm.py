@@ -34,13 +34,15 @@ no new shuffle shapes, no UDFs, whole-stage codegen throughout.
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
-from search_engine_spark.plans.search import analyze_query
+from search_engine_spark.plans.search import (
+    empty_ranked,
+    paginate,
+    query_terms,
+)
 
 
 def collection_tf(
@@ -97,21 +99,11 @@ def search_lm(
     if smoothing == "jm" and not (0.0 < lam < 1.0):
         raise ValueError("jm smoothing needs 0 < lam < 1")
     id_col = index.id_col
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
+    terms = query_terms(index, query, lang, analyzer, use_stoplist)
     cf = collection_tf(index, terms)
     terms = sorted(t for t in terms if cf.get(t, 0) > 0)
-
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
     if not terms:
-        return empty
+        return empty_ranked(index.doc_lens.select(id_col, "site"))
 
     # |C| = Σ doc_len over the whole corpus — an INTEGER; avg_len is
     # stored as sum/n in double, so avg_len·n_docs recovers it to
@@ -171,14 +163,8 @@ def search_lm(
                 * F.log(F.lit(mu) / (F.col("doc_len") + F.lit(mu))),
             )
         )
-    top = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
-        offset + limit
-    )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
+    return paginate(
+        scored, id_col, offset, limit, [id_col, "site", "score"]
     )
 
 
@@ -202,11 +188,9 @@ def search_lm_compact(
     computed from those decoded lists are the terms' FULL cf."""
     from search_engine_spark.plans.wand import logical_view
 
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(cidx.stoplist)
-        terms = [t for t in terms if t not in stop]
-    view = logical_view(cidx, terms)
+    view = logical_view(
+        cidx, query_terms(cidx, query, lang, analyzer, use_stoplist)
+    )
     return search_lm(
         view, query, mu=mu, sites=sites, offset=offset, limit=limit,
         lang=lang, analyzer=analyzer, use_stoplist=use_stoplist,

@@ -50,7 +50,11 @@ import pandas as pd
 from search_engine_spark.functions.codec import bm25_u, read_block
 from search_engine_spark.operators.compact import bucket_of
 from search_engine_spark.lru import BoundedLRU
-from search_engine_spark.plans.search import analyze_query, robertson_idf
+from search_engine_spark.plans.search import (
+    analyze_query,
+    rarest_term,
+    robertson_idf,
+)
 
 # per-index memo caps (serving processes are long-lived; a crawl-wide
 # vocabulary must not accumulate without bound).  Eviction rule:
@@ -462,7 +466,7 @@ class LocalIndex:
         if not terms:
             return (empty, 0) if with_total else empty
 
-        rarest = sorted(terms, key=lambda t: (-idf[t], t))[0]
+        rarest = rarest_term(idf, terms)
         k = offset + limit
         post = self.postings(terms)
 

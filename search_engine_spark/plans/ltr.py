@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
-from search_engine_spark.plans.search import analyze_query, query_term_idf
+from search_engine_spark.plans.search import batch_query_terms
 
 
 def ltr_features(
@@ -62,28 +62,9 @@ def ltr_features(
     k1, b = index.config.bm25.k1, index.config.bm25.b
     spark = index.postings.sparkSession
 
-    stop = set(index.stoplist) if use_stoplist else set()
-    per_query: dict[int, list[str]] = {
-        qid: [
-            t
-            for t in analyze_query(q, lang, analyzer)
-            if t not in stop
-        ]
-        for qid, q in enumerate(queries)
-    }
-    all_terms = sorted({t for ts in per_query.values() for t in ts})
-    idf_all = query_term_idf(index, all_terms, sites)
-
-    rows = []
-    for qid, terms in per_query.items():
-        terms = [t for t in terms if t in idf_all]
-        if not terms:
-            continue
-        rarest = sorted(terms, key=lambda t: (-idf_all[t], t))[0]
-        for t in terms:
-            rows.append(
-                (qid, t, float(idf_all[t]), t == rarest, len(terms))
-            )
+    rows = batch_query_terms(
+        index, enumerate(queries), sites, lang, analyzer, use_stoplist
+    )
 
     base_cols = [
         "query_id", id_col, "site", "bm25", "matched_terms",

@@ -39,7 +39,7 @@ drift disable pruning (exact union scoring), mirroring WAND's guards.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.compact import (
@@ -47,9 +47,12 @@ from search_engine_spark.operators.compact import (
     decode_segments,
 )
 from search_engine_spark.plans.search import (
-    analyze_query,
     bm25_term_score_col,
+    empty_ranked,
+    paginate,
     query_term_idf,
+    query_terms,
+    rarest_term,
 )
 from search_engine_spark.plans.wand import (
     _EPS,
@@ -133,21 +136,11 @@ def search_maxscore_compact(
     ``plans.search.search(candidates="union")`` (oracle-checked);
     MaxScore-pruned candidate generation when metadata allows."""
     id_col = cidx.id_col
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(cidx.stoplist)
-        terms = [t for t in terms if t not in stop]
+    terms = query_terms(cidx, query, lang, analyzer, use_stoplist)
     idf = query_term_idf(cidx, terms, sites)
     terms = [t for t in terms if t in idf]
-
-    empty = (
-        cidx.doc_map.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
     if not terms:
-        return empty
+        return empty_ranked(cidx.doc_map.select(id_col, "site"))
 
     k = offset + limit
     qpost = decode_segments(_segs_for_terms(cidx, terms)).cache()
@@ -173,7 +166,7 @@ def search_maxscore_compact(
             )
             for r in ub_rows
         }
-        rarest = sorted(terms, key=lambda t: (-idf[t], t))[0]
+        rarest = rarest_term(idf)
         seed = (
             _score_union(cidx, qpost, [rarest], terms, idf, sites)
             .orderBy(F.desc("score"))
@@ -195,10 +188,6 @@ def search_maxscore_compact(
     resolved = scored.join(
         cidx.doc_map.select("doc_id", id_col, "site"), "doc_id"
     )
-    top = resolved.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
+    return paginate(
+        resolved, id_col, offset, limit, [id_col, "site", "score"]
     )

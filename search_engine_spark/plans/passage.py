@@ -46,7 +46,12 @@ from pyspark.sql import functions as F
 
 from search_engine_spark.operators.phrases import positional_postings
 from search_engine_spark.operators.postings import InvertedIndex
-from search_engine_spark.plans.search import analyze_query, query_term_idf
+from search_engine_spark.plans.search import (
+    empty_ranked,
+    paginate,
+    query_term_idf,
+    query_terms,
+)
 
 
 def passage_topk(
@@ -78,22 +83,14 @@ def passage_topk(
     id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
 
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(index, terms)
-    terms = sorted(t for t in terms if t in idf)
-
-    empty = (
-        index.doc_lens.select(id_col)
-        .limit(0)
-        .withColumn("passage", F.lit(0))
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
+    idf = query_term_idf(
+        index, query_terms(index, query, lang, analyzer, use_stoplist)
     )
+    terms = sorted(idf)
     if not terms:
-        return empty
+        return empty_ranked(
+            index.doc_lens.select(id_col, F.lit(0).alias("passage"))
+        )
 
     pos = positional_postings(enriched, id_col, tokens_col_name).filter(
         F.col("term").isin(terms)
@@ -151,11 +148,4 @@ def passage_topk(
             F.col("pscore").alias("score"),
         )
     )
-    rank_w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        best.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(offset + limit)
-        .withColumn("rn", F.row_number().over(rank_w).cast("int"))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "passage", "score", "rn")
-    )
+    return paginate(best, id_col, offset, limit)

@@ -34,7 +34,7 @@ Plan shape at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,9 +44,8 @@ from search_engine_spark.operators.postings import (
     doc_lens_table,
 )
 from search_engine_spark.plans.search import (
-    analyze_query,
+    batch_query_terms,
     bm25_term_score_col,
-    query_term_idf,
 )
 
 _QT_SCHEMA = T.StructType(
@@ -71,8 +70,9 @@ def prepare_queries(
     """Registered query set → broadcastable term table
     ``(query_id, term, idf, n_terms, is_rarest)``.
 
-    Each query goes through the forward path's own `analyze_query`
-    (bit-identical analysis) and `query_term_idf` (R11 with the
+    Each query goes through the forward path's own `query_terms`
+    (bit-identical analysis, via `batch_query_terms`), `rarest_term`
+    and `query_term_idf` (R11 with the
     global-df/local-N quirk; terms with non-positive Robertson ratio
     or absent from the dictionary are dropped, exactly like R1).
     Queries that lose every term (e.g. all-stoplist) vanish from the
@@ -88,30 +88,12 @@ def prepare_queries(
     else:
         pairs = [(int(q), s) for q, s in queries]
 
-    stop = set(index.stoplist) if use_stoplist else set()
-    terms_by_q: dict[int, list[str]] = {}
-    vocab: set[str] = set()
-    for qid, text in pairs:
-        ts = [
-            t
-            for t in analyze_query(text or "", lang, analyzer)
-            if t not in stop
-        ]
-        terms_by_q[qid] = ts
-        vocab.update(ts)
-
-    idf = query_term_idf(index, sorted(vocab), sites)
-
-    out = []
-    for qid, ts in terms_by_q.items():
-        kept = [t for t in ts if t in idf]
-        if not kept:
-            continue
-        # R13 tie-break as in search(): max idf, then term asc
-        rarest = sorted(kept, key=lambda t: (-idf[t], t))[0]
-        for t in kept:
-            out.append((qid, t, idf[t], len(kept), t == rarest))
-
+    out = [
+        (qid, t, idf, n_terms, is_rarest)
+        for qid, t, idf, is_rarest, n_terms in batch_query_terms(
+            index, pairs, sites, lang, analyzer, use_stoplist
+        )
+    ]
     spark = index.postings.sparkSession
     return spark.createDataFrame(out, _QT_SCHEMA)
 

@@ -49,8 +49,8 @@ from pyspark.sql import functions as F
 from search_engine_spark.operators.postings import InvertedIndex
 from search_engine_spark.plans.lm import collection_tf
 from search_engine_spark.plans.search import (
-    analyze_query,
     query_term_idf,
+    query_terms,
     search,
 )
 
@@ -66,10 +66,7 @@ def preretrieval_predictors(
     driver-side arithmetic over one stats probe.  Empty/unknown
     queries return all-zero predictors (the hardest possible
     query)."""
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
+    terms = query_terms(index, query, lang, analyzer, use_stoplist)
     idf = query_term_idf(index, terms)
     cf = collection_tf(index, terms)
     terms = sorted(t for t in terms if t in idf and cf.get(t, 0) > 0)

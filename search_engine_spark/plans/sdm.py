@@ -43,14 +43,14 @@ broadcast-feature-literal expression, whole-stage codegen, no UDFs.
 
 from __future__ import annotations
 
-import math
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.functions.textproc import tokenize_py
 from search_engine_spark.operators.phrases import positional_postings
+from search_engine_spark.plans.search import empty_ranked, paginate
 
 
 def query_bigrams(tokens: list[str]) -> list[tuple[str, str]]:
@@ -133,12 +133,7 @@ def search_sdm(
     terms = sorted(set(toks))
     bigrams = query_bigrams(toks)
 
-    empty = (
-        enriched.select(id_col)
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
+    empty = empty_ranked(enriched.select(id_col))
     if not terms:
         return empty
 
@@ -234,11 +229,4 @@ def search_sdm(
                 )
 
     scored = feats.withColumn("score", score).select(id_col, "score")
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(offset + limit)
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit)

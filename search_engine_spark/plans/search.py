@@ -46,6 +46,112 @@ def analyze_query(query: str, lang: str = "english",
     return sorted(set(tokenize_py(query, lang)))
 
 
+def drop_stopwords(index, terms: list[str]) -> list[str]:
+    """``terms`` minus the index's stop-list (R14/R19), order kept.
+    ``index`` is anything carrying a ``stoplist``."""
+    stop = set(index.stoplist)
+    return [t for t in terms if t not in stop]
+
+
+def query_terms(
+    index,
+    query: str,
+    lang: str = "english",
+    analyzer: str = "lemma",
+    use_stoplist: bool = True,
+    fuzzy: bool = False,
+    fuzzy_max_dist: int = 1,
+) -> list[str]:
+    """The terms a ranker scores for ``query``: :func:`analyze_query`,
+    then (``fuzzy``) the out-of-dictionary rewrite, then stop-lemma
+    removal.  ``index`` is an InvertedIndex, CompactIndex or view."""
+    terms = analyze_query(query, lang, analyzer)
+    if fuzzy:
+        from search_engine_spark.operators.fuzzy import (
+            correct_query_terms,
+        )
+
+        fixes = correct_query_terms(
+            index.term_stats, terms, max_dist=fuzzy_max_dist
+        )
+        terms = sorted({v for v in (fixes[t] for t in terms) if v})
+    return drop_stopwords(index, terms) if use_stoplist else terms
+
+
+def rarest_term(
+    idf: dict[str, float], terms: list[str] | None = None
+) -> str:
+    """R13: the max-IDF term of ``terms`` (default: every key of
+    ``idf``); equal IDFs break ties term asc — normative."""
+    return min(idf if terms is None else terms, key=lambda t: (-idf[t], t))
+
+
+def batch_query_terms(
+    index,
+    queries,
+    sites: list[str] | None = None,
+    lang: str = "english",
+    analyzer: str = "lemma",
+    use_stoplist: bool = True,
+) -> list[tuple[int, str, float, bool, int]]:
+    """``[(query_id, term, idf, is_rarest, n_terms)]`` for a query
+    set ``[(query_id, text)]``: each query through :func:`query_terms`,
+    ONE :func:`query_term_idf` probe for the union vocabulary, then
+    per query the R1/R11 drop and the R13 rarest flag.  Queries that
+    lose every term contribute no rows."""
+    per_query = {
+        qid: query_terms(index, q or "", lang, analyzer, use_stoplist)
+        for qid, q in queries
+    }
+    idf = query_term_idf(
+        index, sorted({t for ts in per_query.values() for t in ts}), sites
+    )
+    rows = []
+    for qid, terms in per_query.items():
+        terms = [t for t in terms if t in idf]
+        if terms:
+            rarest = rarest_term(idf, terms)
+            rows.extend(
+                (qid, t, float(idf[t]), t == rarest, len(terms))
+                for t in terms
+            )
+    return rows
+
+
+def empty_ranked(frame: DataFrame) -> DataFrame:
+    """The correctly-typed zero-row ranked result: ``frame``'s columns
+    (so the id keeps its real type) plus ``score`` 0.0 and ``rn`` 0 —
+    the reference's empty response when no query term survives."""
+    return (
+        frame.limit(0)
+        .withColumn("score", F.lit(0.0))
+        .withColumn("rn", F.lit(0))
+    )
+
+
+def paginate(
+    scored: DataFrame,
+    id_col: str,
+    offset: int,
+    limit: int,
+    cols: list[str] | None = None,
+) -> DataFrame:
+    """R15+R17+R18, the one ranked tail of every family: distributed
+    top-(offset+limit) — TakeOrderedAndProject, never a global sort —
+    then ``rn`` over the tiny surviving set with a window; rows with
+    ``rn > offset`` keep ``cols`` (default: all of ``scored``'s
+    columns) plus ``rn``."""
+    top = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
+        offset + limit
+    )
+    w = Window.orderBy(F.desc("score"), F.asc(id_col))
+    return (
+        top.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") > offset)
+        .select(*(cols or scored.columns), "rn")
+    )
+
+
 # Per-index-object memo entry cap: a long-lived serving process
 # cycling through a crawl-wide vocabulary must not grow the df/block
 # metadata memos without bound (same rationale as the lemmatizer's
@@ -181,7 +287,7 @@ def search(
     )
     if scored is None:
         return empty
-    return _paginate(scored, index.id_col, offset, limit)
+    return paginate(scored, index.id_col, offset, limit)
 
 
 def search_after(
@@ -229,24 +335,7 @@ def search_after(
                 & (F.col(id_col) > F.lit(last_id))
             )
         )
-    return _paginate(scored, id_col, 0, limit)
-
-
-def _paginate(
-    scored: DataFrame, id_col: str, offset: int, limit: int
-) -> DataFrame:
-    """R15+R17+R18: distributed top-(offset+limit) —
-    TakeOrderedAndProject, never a global sort — then paginate the
-    tiny surviving set with a window."""
-    top = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
-        offset + limit
-    )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
-    )
+    return paginate(scored, id_col, 0, limit)
 
 
 def _scored_pool(
@@ -260,46 +349,27 @@ def _scored_pool(
     fuzzy_max_dist: int = 1,
     candidates: str = "rarest",
     exclude_terms: list[str] | None = None,
+    term_score=None,
 ) -> tuple[DataFrame | None, DataFrame]:
     """The shared pre-pagination stage of :func:`search`: analysis →
     candidate generation → one candidates × query-postings join →
-    per-doc BM25 sums.  Returns ``(scored, empty)``; ``scored`` is
-    None when no query term survives (callers return ``empty``, the
-    correctly-typed zero-row frame)."""
+    per-doc sums of ``term_score(idf)``, a per-posting column over
+    (term, tf, doc_len) — BM25 (:func:`bm25_term_score_col`) by
+    default.  Returns ``(scored, empty)``; ``scored`` is None when no
+    query term survives (callers return ``empty``, the correctly-typed
+    zero-row frame)."""
     id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
 
-    terms = analyze_query(query, lang, analyzer)
-    if fuzzy:
-        from search_engine_spark.operators.fuzzy import (
-            correct_query_terms,
-        )
-
-        fixes = correct_query_terms(
-            index.term_stats, terms, max_dist=fuzzy_max_dist
-        )
-        terms = sorted({v for v in (fixes[t] for t in terms) if v})
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]  # R14/R19
+    terms = query_terms(
+        index, query, lang, analyzer, use_stoplist, fuzzy, fuzzy_max_dist
+    )
     idf = query_term_idf(index, terms, sites)
     terms = [t for t in terms if t in idf]
 
-    # empty result preserves the id column's real type
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
+    empty = empty_ranked(index.doc_lens.select(id_col, "site"))
     if not terms:
         return None, empty
-
-    # R13: candidates = postings of the single rarest (max-IDF) lemma;
-    # normative tie-break on equal IDF: term asc.  "union" mode widens
-    # to any-term membership (OR semantics) for recall-oriented
-    # callers (more_like_this).
-    rarest = sorted(terms, key=lambda t: (-idf[t], t))[0]
 
     doc_lens = index.doc_lens
     if sites:
@@ -325,8 +395,11 @@ def _scored_pool(
             .select(id_col)
         )
     else:
+        # R13: candidates = postings of the single rarest (max-IDF)
+        # lemma.  "union" mode widens to any-term membership (OR
+        # semantics) for recall-oriented callers (more_like_this).
         cand_ids = index.postings.filter(
-            F.col("term") == rarest
+            F.col("term") == rarest_term(idf)
         ).select(id_col)
     if exclude_terms:
         ex = [
@@ -352,7 +425,9 @@ def _scored_pool(
         candidates.join(qpost, id_col, "inner")
         .withColumn(
             "term_score",
-            bm25_term_score_col(idf, k1, b, index.avg_len),
+            term_score(idf)
+            if term_score
+            else bm25_term_score_col(idf, k1, b, index.avg_len),
         )
         .groupBy(id_col, "site")
         .agg(F.sum("term_score").alias("score"))
@@ -407,7 +482,7 @@ def search_collapsed(
         .filter(F.col("__sr") <= per_site)
         .drop("__sr")
     )
-    return _paginate(best, id_col, offset, limit)
+    return paginate(best, id_col, offset, limit)
 
 
 def search_with_priors(
@@ -465,7 +540,7 @@ def search_with_priors(
         + F.lit(prior_weight)
         * F.coalesce(F.log(F.col("__prior")), neutral),
     ).drop("__prior")
-    return _paginate(boosted, id_col, offset, limit)
+    return paginate(boosted, id_col, offset, limit)
 
 
 def search_total(
@@ -478,19 +553,17 @@ def search_total(
 ) -> int:
     """Pre-pagination candidate total (the reference's ``count``,
     SearchServiceImpl.java:89-98)."""
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        terms = [t for t in terms if t not in set(index.stoplist)]
-    idf = query_term_idf(index, terms, sites)
-    terms = [t for t in terms if t in idf]
-    if not terms:
+    idf = query_term_idf(
+        index, query_terms(index, query, lang, analyzer, use_stoplist),
+        sites,
+    )
+    if not idf:
         return 0
-    rarest = sorted(terms, key=lambda t: (-idf[t], t))[0]
     doc_lens = index.doc_lens
     if sites:
         doc_lens = doc_lens.filter(F.col("site").isin(sites))
     return (
-        index.postings.filter(F.col("term") == rarest)
+        index.postings.filter(F.col("term") == rarest_term(idf))
         .join(doc_lens.select(index.id_col), index.id_col)
         .count()
     )
@@ -754,32 +827,15 @@ def search_many(
     k1, b = index.config.bm25.k1, index.config.bm25.b
     spark = index.postings.sparkSession
 
-    stop = set(index.stoplist) if use_stoplist else set()
-    per_query: dict[int, list[str]] = {}
-    for qid, q in enumerate(queries):
-        terms = [
-            t for t in analyze_query(q, lang, analyzer) if t not in stop
-        ]
-        per_query[qid] = terms
-    all_terms = sorted({t for ts in per_query.values() for t in ts})
-    idf_all = query_term_idf(index, all_terms, sites)
-
-    rows = []
-    for qid, terms in per_query.items():
-        terms = [t for t in terms if t in idf_all]
-        if not terms:
-            continue
-        rarest = sorted(terms, key=lambda t: (-idf_all[t], t))[0]
-        for t in terms:
-            rows.append((qid, t, float(idf_all[t]), t == rarest))
+    rows = [
+        r[:4]
+        for r in batch_query_terms(
+            index, enumerate(queries), sites, lang, analyzer, use_stoplist
+        )
+    ]
     if not rows:
-        return (
-            index.doc_lens.select(id_col, "site")
-            .limit(0)
-            .withColumn("query_id", F.lit(0))
-            .withColumn("score", F.lit(0.0))
-            .withColumn("rn", F.lit(0))
-            .select("query_id", id_col, "site", "score", "rn")
+        return empty_ranked(
+            index.doc_lens.select(F.lit(0).alias("query_id"), id_col, "site")
         )
     qterm = spark.createDataFrame(
         rows, "query_id int, term string, idf double, is_rarest boolean"
@@ -809,23 +865,12 @@ def search_many(
         F.broadcast(qterm.select("query_id", "term", "idf")), "term"
     )
 
-    tfn = F.col("tf").cast("double") / F.col("doc_len")
-    term_score = (
-        F.col("idf")
-        * tfn
-        * F.lit(k1 + 1.0)
-        / (
-            tfn
-            + F.lit(k1)
-            * (
-                F.lit(1.0 - b)
-                + F.lit(b) * F.col("doc_len") / F.lit(index.avg_len)
-            )
-        )
-    )
     scored = (
         cand.join(qpost, ["query_id", id_col], "inner")
-        .withColumn("term_score", term_score)
+        .withColumn(
+            "term_score",
+            bm25_term_score_col(F.col("idf"), k1, b, index.avg_len),
+        )
         .groupBy("query_id", id_col, "site")
         .agg(F.sum("term_score").alias("score"))
     )
@@ -890,12 +935,7 @@ def more_like_this(
         if r["term"] not in stop and r["df"] > 1
     ][:n_terms]
     if not terms:
-        return (
-            index.doc_lens.select(id_col, "site")
-            .limit(0)
-            .withColumn("score", F.lit(0.0))
-            .withColumn("rn", F.lit(0).cast("int"))
-        )
+        return empty_ranked(index.doc_lens.select(id_col, "site"))
     res = search(
         index, " ".join(terms), sites=sites, limit=k + 1,
         analyzer="tokens", use_stoplist=False, candidates="union",
@@ -924,12 +964,10 @@ def facet_counts(
     One candidate generation + one map-side-combined count — no
     scoring, no window; cost is O(candidate postings).
     """
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        terms = [t for t in terms if t not in stop]
-    idf = query_term_idf(index, terms)
-    terms = [t for t in terms if t in idf]
+    idf = query_term_idf(
+        index, query_terms(index, query, lang, analyzer, use_stoplist)
+    )
+    terms = sorted(idf)
     id_col = index.id_col
     if not terms:
         return (
@@ -944,10 +982,9 @@ def facet_counts(
             .distinct()
         )
     else:
-        rarest = sorted(terms, key=lambda t: (-idf[t], t))[0]
-        cand = index.postings.filter(F.col("term") == rarest).select(
-            id_col
-        )
+        cand = index.postings.filter(
+            F.col("term") == rarest_term(idf)
+        ).select(id_col)
     return (
         cand.join(index.doc_lens.select(id_col, facet_col), id_col)
         .groupBy(facet_col)

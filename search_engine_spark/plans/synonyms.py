@@ -31,13 +31,18 @@ scans, no new shuffle shapes.
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
-from search_engine_spark.plans.search import analyze_query
+from search_engine_spark.plans.search import (
+    analyze_query,
+    bm25_term_score_col,
+    drop_stopwords,
+    empty_ranked,
+    paginate,
+    robertson_idf,
+)
 
 
 def expand_terms(
@@ -97,6 +102,25 @@ def group_stats(
     return {r["grp"]: int(r["gdf"]) for r in rows}
 
 
+def _query_groups(
+    index, query: str, synonyms, lang: str, analyzer: str,
+    use_stoplist: bool,
+) -> dict[str, list[str]]:
+    """Analyzed query → synonym groups, stop-listed MEMBERS removed (a
+    group whose every member is stopped is dropped)."""
+    groups = expand_terms(
+        analyze_query(query, lang, analyzer), synonyms or {}, lang,
+        analyzer,
+    )
+    if not use_stoplist:
+        return groups
+    return {
+        g: kept
+        for g, members in groups.items()
+        if (kept := drop_stopwords(index, members))
+    }
+
+
 def search_synonyms(
     index: InvertedIndex,
     query: str,
@@ -120,15 +144,9 @@ def search_synonyms(
     rank-identical to plain ``search`` (default rarest-term
     candidates) — pinned by tests.
     """
-    terms = analyze_query(query, lang, analyzer)
-    groups = expand_terms(terms, synonyms or {}, lang, analyzer)
-    if use_stoplist:
-        stop = set(index.stoplist)
-        groups = {
-            g: kept
-            for g, members in groups.items()
-            if (kept := [m for m in members if m not in stop])
-        }
+    groups = _query_groups(
+        index, query, synonyms, lang, analyzer, use_stoplist
+    )
     return search_groups(index, groups, sites, offset, limit)
 
 
@@ -148,12 +166,7 @@ def search_groups(
     id_col = index.id_col
     k1, b = index.config.bm25.k1, index.config.bm25.b
 
-    empty = (
-        index.doc_lens.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
+    empty = empty_ranked(index.doc_lens.select(id_col, "site"))
     if not groups:
         return empty
 
@@ -168,12 +181,7 @@ def search_groups(
     else:
         n = index.n_docs
     # Robertson idf over the group union df; non-positive dropped
-    # (the same NaN-poisoning guard as query_term_idf)
-    idf: dict[str, float] = {}
-    for g, df_g in gdf.items():
-        ratio = (n - df_g + 0.5) / (df_g + 0.5)
-        if ratio > 0:
-            idf[g] = math.log(ratio)
+    idf = robertson_idf(n, gdf)
     groups = {g: m for g, m in groups.items() if g in idf}
     if not groups:
         return empty
@@ -201,45 +209,25 @@ def search_groups(
     )
 
     # one filtered scan of ALL groups' member postings; member→group
-    # broadcast; group tf = Σ member tf per doc
+    # broadcast; group tf = Σ member tf per doc.  Each group then
+    # scores as one term (key → ``term``, group tf → ``tf``) through
+    # the shared BM25 expression.
     qpost = (
         index.postings.filter(F.col("term").isin(all_members))
         .join(F.broadcast(gmap), "term")
-        .groupBy(id_col, "grp")
-        .agg(F.sum("tf").alias("gtf"))
-    )
-    idf_col = F.create_map(
-        *[x for g in sorted(idf) for x in (F.lit(g), F.lit(idf[g]))]
-    )[F.col("grp")]
-    tfn = F.col("gtf").cast("double") / F.col("doc_len")
-    group_score = (
-        idf_col
-        * tfn
-        * F.lit(k1 + 1.0)
-        / (
-            tfn
-            + F.lit(k1)
-            * (
-                F.lit(1.0 - b)
-                + F.lit(b) * F.col("doc_len") / F.lit(index.avg_len)
-            )
-        )
+        .groupBy(id_col, F.col("grp").alias("term"))
+        .agg(F.sum("tf").alias("tf"))
     )
     scored = (
         candidates.join(qpost, id_col, "inner")
-        .withColumn("group_score", group_score)
+        .withColumn(
+            "group_score",
+            bm25_term_score_col(idf, k1, b, index.avg_len),
+        )
         .groupBy(id_col, "site")
         .agg(F.sum("group_score").alias("score"))
     )
-    top = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
-        offset + limit
-    )
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
-    )
+    return paginate(scored, id_col, offset, limit)
 
 
 def search_synonyms_compact(
@@ -259,15 +247,9 @@ def search_synonyms_compact(
     :func:`plans.wand.logical_view`."""
     from search_engine_spark.plans.wand import logical_view
 
-    terms = analyze_query(query, lang, analyzer)
-    groups = expand_terms(terms, synonyms or {}, lang, analyzer)
-    if use_stoplist:
-        stop = set(cidx.stoplist)
-        groups = {
-            g: kept
-            for g, members in groups.items()
-            if (kept := [m for m in members if m not in stop])
-        }
+    groups = _query_groups(
+        cidx, query, synonyms, lang, analyzer, use_stoplist
+    )
     members = sorted({m for ms in groups.values() for m in ms})
     view = logical_view(cidx, members)
     return search_groups(view, groups, sites, offset, limit)

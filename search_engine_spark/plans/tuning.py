@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 from search_engine_spark.operators.postings import InvertedIndex
 from search_engine_spark.plans.eval import rank_eval
 from search_engine_spark.plans.search import (
-    analyze_query,
-    query_term_idf,
+    batch_query_terms,
+    empty_ranked,
 )
 
 # composite-key stride: combo * _QSTRIDE + query_id.  Query ids are
@@ -60,41 +60,21 @@ def bm25_grid_scores(
     id_col = index.id_col
     spark = index.postings.sparkSession
 
-    stop = set(index.stoplist) if use_stoplist else set()
-    per_query = {
-        qid: [
-            t
-            for t in analyze_query(q, lang, analyzer)
-            if t not in stop
-        ]
-        for qid, q in enumerate(queries)
-    }
-    all_terms = sorted({t for ts in per_query.values() for t in ts})
-    idf_all = query_term_idf(index, all_terms, sites)
-
-    rows = []
-    for qid, terms in per_query.items():
-        terms = [t for t in terms if t in idf_all]
-        if not terms:
-            continue
-        rarest = sorted(terms, key=lambda t: (-idf_all[t], t))[0]
-        for t in terms:
-            rows.append((qid, t, float(idf_all[t]), t == rarest))
+    rows = [
+        r[:4]
+        for r in batch_query_terms(
+            index, enumerate(queries), sites, lang, analyzer, use_stoplist
+        )
+    ]
 
     gridf = spark.createDataFrame(
         [(i, float(k1), float(b)) for i, (k1, b) in enumerate(grid)],
         "combo int, k1 double, b double",
     )
     if not rows:
-        return (
-            index.doc_lens.select(id_col)
-            .limit(0)
-            .crossJoin(gridf)
-            .withColumn("query_id", F.lit(0))
-            .withColumn("score", F.lit(0.0))
-            .withColumn("rn", F.lit(0))
-            .select(
-                "combo", "k1", "b", "query_id", id_col, "score", "rn"
+        return empty_ranked(
+            index.doc_lens.select(id_col).limit(0).crossJoin(gridf).select(
+                "combo", "k1", "b", F.lit(0).alias("query_id"), id_col
             )
         )
     qterm = spark.createDataFrame(

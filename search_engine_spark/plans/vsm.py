@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.postings import InvertedIndex
+from search_engine_spark.plans.search import empty_ranked, paginate
 
 __all__ = ["vsm_doc_norms", "vsm_topk"]
 
@@ -84,11 +85,7 @@ def vsm_topk(
     id_col = index.id_col
     tf_q = _query_tf(query, lang, analyzer)
     terms = sorted(tf_q)
-    empty = index.doc_lens.select(
-        F.col(id_col),
-        F.lit(0.0).alias("score"),
-        F.lit(0).cast("int").alias("rn"),
-    ).limit(0)
+    empty = empty_ranked(index.doc_lens.select(id_col))
     if not terms:
         return empty
     df_rows = (
@@ -129,13 +126,4 @@ def vsm_topk(
             ).alias("score"),
         )
     )
-    from pyspark.sql.window import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    out = (
-        scored.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(offset + limit)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-    )
-    return out.select(id_col, "score", F.col("rn").cast("int").alias("rn"))
+    return paginate(scored, id_col, offset, limit)

@@ -19,7 +19,7 @@ blocks, in Arrow-batched ``mapInPandas`` workers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.compact import (
@@ -30,9 +30,13 @@ from search_engine_spark.operators.compact import (
 from search_engine_spark.lru import index_memo
 from search_engine_spark.plans.search import (
     _MEMO_CAP,
-    analyze_query,
     bm25_term_score_col,
+    empty_ranked,
+    paginate,
     query_term_idf,
+    query_terms,
+    rarest_term,
+    search_many,
 )
 
 # Relative tie/float-safety margin on the pruning threshold: a block is
@@ -315,10 +319,7 @@ def explain_prune(
     append).  Runs the same metadata + seed phases as
     :func:`search_compact` — cost is metadata-scale plus one seed
     scoring job."""
-    terms = analyze_query(query, lang, analyzer)
-    if use_stoplist:
-        stop = set(cidx.stoplist)
-        terms = [t for t in terms if t not in stop]
+    terms = query_terms(cidx, query, lang, analyzer, use_stoplist)
     idf = query_term_idf(cidx, terms, None)
     terms = [t for t in terms if t in idf]
     if not terms:
@@ -336,9 +337,8 @@ def explain_prune(
             "blocks_skipped": 0,
             "candidates_skipped": 0,
         }
-    rarest = sorted(terms, key=lambda t: (-idf[t], t))[0]
     selected, qpost, stats = _wand_select_blocks(
-        cidx, terms, idf, rarest, offset + limit, None, True,
+        cidx, terms, idf, rarest_term(idf), offset + limit, None, True,
         prune_min_candidates,
     )
     if qpost is not None:
@@ -368,32 +368,15 @@ def search_compact(
     out-of-dictionary terms exactly like the logical path (the
     compact index carries the same term_stats dictionary)."""
     id_col = cidx.id_col
-    terms = analyze_query(query, lang, analyzer)
-    if fuzzy:
-        from search_engine_spark.operators.fuzzy import (
-            correct_query_terms,
-        )
-
-        fixes = correct_query_terms(
-            cidx.term_stats, terms, max_dist=fuzzy_max_dist
-        )
-        terms = sorted({v for v in (fixes[t] for t in terms) if v})
-    if use_stoplist:
-        stop = set(cidx.stoplist)
-        terms = [t for t in terms if t not in stop]
+    terms = query_terms(
+        cidx, query, lang, analyzer, use_stoplist, fuzzy, fuzzy_max_dist
+    )
     idf = query_term_idf(cidx, terms, sites)
     terms = [t for t in terms if t in idf]
-
-    empty = (
-        cidx.doc_map.select(id_col, "site")
-        .limit(0)
-        .withColumn("score", F.lit(0.0))
-        .withColumn("rn", F.lit(0))
-    )
     if not terms:
-        return empty
+        return empty_ranked(cidx.doc_map.select(id_col, "site"))
 
-    rarest = sorted(terms, key=lambda t: (-idf[t], t))[0]
+    rarest = rarest_term(idf)
     k = offset + limit
 
     selected, qpost_shared, _stats = _wand_select_blocks(
@@ -409,12 +392,8 @@ def search_compact(
     resolved = scored.join(
         cidx.doc_map.select("doc_id", id_col, "site"), "doc_id"
     )
-    top = resolved.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        top.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") > offset)
-        .select(id_col, "site", "score", "rn")
+    return paginate(
+        resolved, id_col, offset, limit, [id_col, "site", "score"]
     )
 
 
@@ -440,27 +419,17 @@ def search_many_compact(
     and is intentionally skipped (batch wins come from scan/decode
     sharing; the exact scorer matches WAND's ranks by construction).
     """
-    from search_engine_spark.operators.postings import InvertedIndex
-    from search_engine_spark.plans.search import search_many
-
     id_col = cidx.id_col
-    stop = set(cidx.stoplist) if use_stoplist else set()
     all_terms = sorted(
         {
             t
             for q in queries
-            for t in analyze_query(q, lang, analyzer)
-            if t not in stop
+            for t in query_terms(cidx, q, lang, analyzer, use_stoplist)
         }
     )
     if not all_terms:
-        return (
-            cidx.doc_map.select(id_col, "site")
-            .limit(0)
-            .withColumn("query_id", F.lit(0))
-            .withColumn("score", F.lit(0.0))
-            .withColumn("rn", F.lit(0))
-            .select("query_id", id_col, "site", "score", "rn")
+        return empty_ranked(
+            cidx.doc_map.select(F.lit(0).alias("query_id"), id_col, "site")
         )
     idx = logical_view(cidx, all_terms)
     return search_many(

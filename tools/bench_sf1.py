@@ -47,7 +47,6 @@ def main() -> None:
             "-Xms24g -XX:+AlwaysPreTouch -XX:+UseParallelGC",
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.scheduler.mode", "FAIR")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
